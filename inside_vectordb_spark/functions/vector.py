@@ -29,14 +29,27 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Only a SIMPLE identifier may be interpolated into the parsed-SQL
-# fast paths (advice r12): a name with dots/spaces/reserved words
-# would mis-parse or resolve as a struct-field access. Anything else
-# falls through to the Column builder, which handles any name.
+# fast paths (advice r12): a name with dots/spaces would mis-parse or
+# resolve as a struct-field access, and the parser reads the niladic
+# names below as function calls (``current_date`` -> current_date())
+# under spark.sql.ansi.enforceReservedKeywords. Anything else falls
+# through to the Column builder, which handles any name.
 _SIMPLE_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
+_NILADIC = frozenset(
+    {
+        "current_date", "current_timestamp", "current_time", "current_user",
+        "current_catalog", "current_database", "current_schema",
+        "session_user", "user",
+    }
+)
 
 
 def _simple(name: object) -> bool:
-    return isinstance(name, str) and _SIMPLE_IDENT.fullmatch(name) is not None
+    return (
+        isinstance(name, str)
+        and _SIMPLE_IDENT.fullmatch(name) is not None
+        and name.lower() not in _NILADIC
+    )
 
 # Optimization r12 (guide §1.2 "per-task work" applied to the DRIVER):
 # when the operand is a plain column NAME, each helper builds its whole

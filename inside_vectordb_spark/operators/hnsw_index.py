@@ -84,6 +84,7 @@ from inside_vectordb_spark.operators.ann_index import (
     _merge_fingerprint,
 )
 from inside_vectordb_spark.operators.hnsw_kernel import HnswIndex
+from inside_vectordb_spark.operators.topk import _PARTIAL_SCHEMA
 
 GRAPH_SCHEMA = StructType(
     [
@@ -94,14 +95,6 @@ GRAPH_SCHEMA = StructType(
         StructField("neighbors", ArrayType(LongType())),
         StructField("vector", ArrayType(DoubleType())),
         StructField("meta_json", StringType()),
-    ]
-)
-
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("query_id", LongType()),
-        StructField("doc_id", LongType()),
-        StructField("score", DoubleType()),
     ]
 )
 
@@ -125,6 +118,29 @@ def _gc_dirs(path: str, gc_now: list) -> None:
             mio.remove_tree(os.path.join(path, old_rel))
         else:
             mio.remove_tree(os.path.join(path, old_rel, f"part={p}"))
+
+
+def _live_rel(path: str, meta: dict, p: int) -> str | None:
+    """THE generation rule: the dir serving partition ``p`` is the one
+    meta's ``part_rels`` names for it, else ``base_rel``. None when that
+    dir holds no ``part=p`` data — a partition never populated, or
+    rebuilt to zero rows (incremental compact of a fully-tombstoned
+    shard writes a generation with no part=p data — advice r10:
+    falling back to base_rel would resurrect compacted-away rows, and
+    reading a data-less generation dir raises UNABLE_TO_INFER_SCHEMA)."""
+    part_rels = meta.get("part_rels", {}) or {}
+    rel = part_rels.get(str(p), meta.get("base_rel", "graph"))
+    return rel if mio.is_dir(os.path.join(path, rel, f"part={p}")) else None
+
+
+def _fresh_rel(path: str, prefix: str) -> str:
+    """Smallest ``<prefix><n>`` whose dir doesn't exist — a new
+    generation never reuses a directory a live or grace-period meta
+    could name (the lexical `_fresh_delta` discipline)."""
+    n = 1
+    while os.path.isdir(os.path.join(path, f"{prefix}{n}")):
+        n += 1
+    return f"{prefix}{n}"
 
 
 def _part_expr(id_col: str, n_parts: int):
@@ -155,13 +171,9 @@ def _index_to_rows(part: int, index: HnswIndex) -> pd.DataFrame:
         "max_level": state["max_level"],
         "rng_state_json": state["rng_state_json"],
         "n": len(ids),
-        # Alg. 4 flags ride the header so a reconstructed kernel keeps
-        # the build's selection rule for continued inserts (r11)
+        # the Alg. 4 flag rides the header so a reconstructed kernel
+        # keeps the build's selection rule for continued inserts (r11)
         "heuristic": bool(state.get("heuristic", False)),
-        "extend_candidates": bool(state.get("extend_candidates", False)),
-        "keep_pruned_connections": bool(
-            state.get("keep_pruned_connections", False)
-        ),
     }
     body = pd.DataFrame(
         {
@@ -219,10 +231,6 @@ def _index_from_rows(pdf: pd.DataFrame, m: int, ef_construction: int, dim: int) 
             "max_level": int(hdr["max_level"]),
             "rng_state_json": hdr["rng_state_json"],
             "heuristic": bool(hdr.get("heuristic", False)),
-            "extend_candidates": bool(hdr.get("extend_candidates", False)),
-            "keep_pruned_connections": bool(
-                hdr.get("keep_pruned_connections", False)
-            ),
             "ids": ids,
             "vecs": vecs,
             "links": links,
@@ -391,21 +399,11 @@ def _read_graph(spark: SparkSession, path: str, meta: dict) -> DataFrame:
     interrupted upsert (generation written, meta not yet swapped)
     reads as the pre-upsert index — and superseded dirs survive one
     commit for in-flight readers (the lexical-index discipline)."""
-    part_rels: dict[str, str] = meta.get("part_rels", {}) or {}
-    base_rel = meta.get("base_rel", "graph")
     by_rel: dict[str, list[int]] = {}
     for p in range(int(meta["n_parts"])):
-        rel = part_rels.get(str(p), base_rel)
-        # resolve per-(rel, part): a pair whose part=p subdir is absent
-        # is a partition that was never populated OR rebuilt to zero
-        # rows (incremental compact of a fully-tombstoned shard writes
-        # a generation dir with no part=p data — advice r10: falling
-        # back to base_rel here would resurrect compacted-away rows,
-        # and reading a data-less generation dir raises
-        # UNABLE_TO_INFER_SCHEMA). Same guard as the indexed search.
-        if not mio.is_dir(os.path.join(path, rel, f"part={p}")):
-            continue
-        by_rel.setdefault(rel, []).append(p)
+        rel = _live_rel(path, meta, p)
+        if rel is not None:
+            by_rel.setdefault(rel, []).append(p)
     out = None
     for rel, parts in sorted(by_rel.items()):
         g = (
@@ -594,14 +592,12 @@ def ann_hnsw_topk_indexed(
         if not pdf.empty:
             yield search_one(pdf)
 
-    part_rels: dict[str, str] = meta.get("part_rels", {}) or {}
-    base_rel = meta.get("base_rel", "graph")
     partials = None
     for p in range(int(meta["n_parts"])):
-        d = os.path.join(path, part_rels.get(str(p), base_rel))
-        if not mio.is_dir(os.path.join(d, f"part={p}")):
+        rel = _live_rel(path, meta, p)
+        if rel is None:
             continue
-        src = spark.read.parquet(d).filter(
+        src = spark.read.parquet(os.path.join(path, rel)).filter(
             # no cast on the partition column — it would block the
             # PartitionFilters prune that makes this scan one dir
             F.col("part") == p
@@ -645,16 +641,6 @@ def ann_hnsw_topk_indexed(
     if round_to is not None:
         out = out.withColumn("score", F.round("score", round_to))
     return out.select("query_id", "doc_id", "score", "rank")
-
-
-def _fresh_upsert_rel(path: str) -> str:
-    """Smallest ``graph_u<n>`` whose dir doesn't exist — an upsert
-    generation never reuses a directory a live or grace-period meta
-    could name (the lexical `_fresh_delta` discipline)."""
-    n = 1
-    while os.path.isdir(os.path.join(path, f"graph_u{n}")):
-        n += 1
-    return f"graph_u{n}"
 
 
 def upsert_hnsw_index(
@@ -772,9 +758,8 @@ def _upsert_hnsw_locked(
     # delta rows, coalesced into a single task — graph rows never
     # cross an exchange during maintenance either (the groupBy form
     # hash-exchanged every touched partition's whole graph)
-    part_rels0 = dict(meta.get("part_rels", {}) or {})
-    base_rel0 = meta.get("base_rel", "graph")
     out = None
+    superseded = []
     for p in touched:
         d_rows = delta.filter(F.col("part") == p).select(
             F.col("part").cast("long").alias("part"),
@@ -786,11 +771,12 @@ def _upsert_hnsw_locked(
             F.lit(None).cast(StringType()).alias("meta_json"),
             F.col("v").alias("__delta_v"),
         )
-        gdir = os.path.join(path, part_rels0.get(str(p), base_rel0))
+        grel = _live_rel(path, meta, p)
         branch = d_rows
-        if mio.is_dir(os.path.join(gdir, f"part={p}")):
+        if grel is not None:
+            superseded.append([grel, p])
             g_rows = (
-                spark.read.parquet(gdir)
+                spark.read.parquet(os.path.join(path, grel))
                 .filter(F.col("part") == p)  # PartitionFilters prune
                 .select(
                     F.col("part").cast("long").alias("part"),
@@ -810,19 +796,11 @@ def _upsert_hnsw_locked(
             extend_whole_partition, GRAPH_SCHEMA
         )
         out = branch if out is None else out.unionByName(branch)
-    rel = _fresh_upsert_rel(path)
+    rel = _fresh_rel(path, "graph_u")
     out.write.mode("overwrite").partitionBy("part").parquet(
         os.path.join(path, rel)
     )
     part_rels = dict(meta.get("part_rels", {}) or {})
-    base_rel = meta.get("base_rel", "graph")
-    superseded = [
-        [part_rels.get(str(p), base_rel), p]
-        for p in touched
-        if mio.is_dir(
-            os.path.join(path, part_rels.get(str(p), base_rel), f"part={p}")
-        )
-    ]
     for p in touched:
         part_rels[str(p)] = rel
     meta["part_rels"] = part_rels
@@ -872,20 +850,6 @@ def delete_from_hnsw_index(
             meta["n_deleted"] = meta.get("n_deleted", 0) + len(fresh)
             mio.write_json(mio.join(path, "meta.json"), meta, indent=2)
         return meta
-
-
-def _fresh_compact_rel(path: str) -> str:
-    n = 1
-    while os.path.isdir(os.path.join(path, f"graph_c{n}")):
-        n += 1
-    return f"graph_c{n}"
-
-
-def _fresh_tomb_rel(path: str) -> str:
-    n = 1
-    while os.path.isdir(os.path.join(path, f"tombstones_g{n}")):
-        n += 1
-    return f"tombstones_g{n}"
 
 
 def compact_hnsw_index(
@@ -950,8 +914,6 @@ def compact_hnsw_index(
         if tomb_df is not None:
             live = live.join(tomb_df, "doc_id", "left_anti")
 
-        part_rels = dict(meta.get("part_rels", {}) or {})
-        base_rel = meta.get("base_rel", "graph")
         if min_dead_fraction is None:
             dirty = list(range(int(meta["n_parts"])))
             n_removed = meta.get("n_deleted", 0)
@@ -1017,7 +979,7 @@ def compact_hnsw_index(
                 f"compaction would leave the HNSW index at {path} EMPTY "
                 "(every row tombstoned) — rebuild over a fresh corpus instead"
             )
-        rel = _fresh_compact_rel(path)
+        rel = _fresh_rel(path, "graph_c")
         # stored vectors are already normalized; build_one re-normalizes,
         # which is idempotent on unit vectors — the rebuilt partition is
         # bit-identical to a fresh build over the live rows
@@ -1031,8 +993,8 @@ def compact_hnsw_index(
         )
         superseded = []
         for p in dirty:
-            old = part_rels.get(str(p), base_rel)
-            if mio.is_dir(os.path.join(path, old, f"part={p}")):
+            old = _live_rel(path, meta, p)
+            if old is not None:
                 superseded.append([old, p])
         if has_tomb:
             # the superseded tombstone relation ALWAYS enters
@@ -1060,6 +1022,7 @@ def compact_hnsw_index(
                 str(p): n for p, n in sorted(live_counts.items())
             }
         else:
+            part_rels = dict(meta.get("part_rels", {}) or {})
             for p in dirty:
                 part_rels[str(p)] = rel
             meta["part_rels"] = part_rels
@@ -1074,7 +1037,7 @@ def compact_hnsw_index(
                 # survivors move to a FRESH versioned relation; the
                 # meta commit swaps it in atomically (a crash before
                 # the commit leaves the old relation fully live)
-                new_tomb = _fresh_tomb_rel(path)
+                new_tomb = _fresh_rel(path, "tombstones_g")
                 spark.createDataFrame(
                     pd.DataFrame({"id": np.array(remaining, dtype=np.int64)})
                 ).write.mode("overwrite").parquet(

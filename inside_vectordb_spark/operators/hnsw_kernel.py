@@ -64,18 +64,12 @@ class HnswIndex:
         ef_construction: int = 100,
         seed: int = 42,
         heuristic: bool = False,
-        extend_candidates: bool = False,
-        keep_pruned_connections: bool = False,
     ) -> None:
         if m < 2:
             raise ValueError("m must be >= 2")
         self.dim = dim
         self.m = m
         self.heuristic = bool(heuristic)
-        # Alg. 4 sub-flags (paper §4); both default False = hnswlib's
-        # getNeighborsByHeuristic2. Only meaningful with heuristic=True.
-        self.extend_candidates = bool(extend_candidates)
-        self.keep_pruned_connections = bool(keep_pruned_connections)
         self.m_max0 = 2 * m  # layer-0 degree bound (paper §4)
         self.ef_construction = max(ef_construction, m)
         self.ef = max(10, m)
@@ -171,8 +165,6 @@ class HnswIndex:
             "m": self.m,
             "ef_construction": self.ef_construction,
             "heuristic": self.heuristic,
-            "extend_candidates": self.extend_candidates,
-            "keep_pruned_connections": self.keep_pruned_connections,
             "entry": self._entry,
             "max_level": self._max_level,
             "rng_state_json": _json.dumps(self._rng.bit_generator.state),
@@ -204,10 +196,6 @@ class HnswIndex:
             # pre-r11 states carry no flag: they were built with simple
             # selection, so continued inserts must keep using it
             heuristic=bool(state.get("heuristic", False)),
-            extend_candidates=bool(state.get("extend_candidates", False)),
-            keep_pruned_connections=bool(
-                state.get("keep_pruned_connections", False)
-            ),
         )
         idx._rng.bit_generator.state = _json.loads(state["rng_state_json"])
         vecs = np.asarray(state["vecs"], dtype=np.float64)
@@ -305,14 +293,10 @@ class HnswIndex:
         return [(-nd, nb) for nd, nb in best]
 
     def _select_heuristic(
-        self,
-        q: np.ndarray,
-        cands: list[tuple[float, int]],
-        m: int,
-        level: int | None = None,
+        self, q: np.ndarray, cands: list[tuple[float, int]], m: int
     ) -> list[int]:
-        """Alg. 4 (SELECT-NEIGHBORS-HEURISTIC, Malkov-Yashunin §4),
-        default flags matching hnswlib's ``getNeighborsByHeuristic2``
+        """Alg. 4 (SELECT-NEIGHBORS-HEURISTIC, Malkov-Yashunin §4) with
+        hnswlib's ``getNeighborsByHeuristic2`` flags
         (extendCandidates=False, keepPrunedConnections=False): walk
         candidates in (distance-to-q, internal idx) order and keep one
         only if it is closer to q than to EVERY already-kept neighbor.
@@ -320,50 +304,19 @@ class HnswIndex:
         hnswlib's strict ``curdist < dist_to_query`` reject. May return
         fewer than m on tightly clustered data — by design: an edge
         inside an already-covered direction is the edge the heuristic
-        exists to NOT spend.
-
-        ``extend_candidates`` (paper flag; needs ``level`` to look up
-        the working layer) unions the candidates' own neighbors into
-        the working set before selection — the paper recommends it
-        only for extremely clustered data. ``keep_pruned_connections``
-        fills remaining slots from the discarded queue nearest-first,
-        guaranteeing exactly min(m, |candidates|) edges."""
+        exists to NOT spend."""
         ordered = sorted(cands, key=lambda t: (t[0], t[1]))
-        if self.extend_candidates and level is not None:
-            links = self._links[level]
-            seen = {c for _, c in ordered}
-            extra = sorted(
-                {
-                    nb
-                    for _, c in ordered
-                    for nb in links.get(c, ())
-                    if nb not in seen
-                }
-            )
-            if extra:
-                ds = self._dists(q, extra)
-                ordered = sorted(
-                    ordered + list(zip(ds.tolist(), extra)),
-                    key=lambda t: (t[0], t[1]),
-                )
         if len(ordered) < m:
             # hnswlib: fewer candidates than slots -> keep them all
             # (getNeighborsByHeuristic2's size()<M early return)
             return [c for _, c in ordered]
         out: list[int] = []
-        discarded: list[tuple[float, int]] = []
         for d, c in ordered:
             if len(out) >= m:
                 break
             cv = self._vecs[c]
             if all(1.0 - float(cv @ self._vecs[r]) >= d for r in out):
                 out.append(c)
-            elif self.keep_pruned_connections:
-                discarded.append((d, c))
-        for _, c in discarded:
-            if len(out) >= m:
-                break
-            out.append(c)
         return out
 
     def _insert(self, idx: int, level: int) -> None:
@@ -383,7 +336,7 @@ class HnswIndex:
             found.sort(key=lambda t: t[0])
             m_max = self.m_max0 if lv == 0 else self.m
             if self.heuristic:
-                neighbors = self._select_heuristic(q, found, self.m, level=lv)
+                neighbors = self._select_heuristic(q, found, self.m)
             else:
                 neighbors = [ix for _, ix in found[: self.m]]
             self._links[lv][idx] = list(neighbors)
@@ -398,8 +351,7 @@ class HnswIndex:
                         nbv = self._vecs[nb]
                         ds = self._dists(nbv, links)
                         self._links[lv][nb] = self._select_heuristic(
-                            nbv, list(zip(ds.tolist(), links)), m_max,
-                            level=lv,
+                            nbv, list(zip(ds.tolist(), links)), m_max
                         )
                     else:
                         # prune to the m_max closest of nb's neighbors

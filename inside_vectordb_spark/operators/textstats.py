@@ -155,10 +155,13 @@ def _quality_parts(text_col: str):
     from ..functions.vector import _simple
 
     if not _simple(text_col):
-        # Backtick-quote non-simple identifiers before interpolating
-        # into parsed SQL (advice r12): a name with dots/spaces would
-        # mis-parse or resolve as a struct-field access.
-        text_col = "`" + text_col.replace("`", "``") + "`"
+        # Backtick-quote each dot-separated segment before interpolating
+        # into parsed SQL: spaces or keywords in a segment can't
+        # mis-parse, and ``meta.text`` still resolves as a struct field,
+        # the way F.col reads it in vector.py and ann_sign.py.
+        text_col = ".".join(
+            "`" + seg.replace("`", "``") + "`" for seg in text_col.split(".")
+        )
     toks = r"array_remove(split(%s, '[ \\t\\n\\f\\r]+'), '')" % text_col
     n = f"CAST(size({toks}) AS DOUBLE)"
     n_alpha = f"length(regexp_replace({text_col}, '[^A-Za-z]', ''))"

@@ -73,6 +73,23 @@ def test_metrics_broadcast_qrels(spark):
     assert_not_in_plan(df, "SortMergeJoin")
 
 
+def test_evaluation_report_no_cross_join(spark):
+    """The report is one per-query aggregate with per-K conditional
+    counts: no K dimension table cross-joined into the plan. (Scored
+    over a fixed ranked list: the exact top-k feeding the registry row
+    broadcasts its query side through a nested-loop join of its own.)"""
+    from inside_vectordb_spark.operators.metrics import evaluation_report
+
+    topk = spark.createDataFrame(
+        [(0, 1, 0.9, 1), (0, 2, 0.8, 2), (1, 3, 0.7, 1)],
+        "query_id long, doc_id long, score double, rank int",
+    )
+    df = evaluation_report(topk, eio.qrels(spark, SF_DIR))
+    assert_not_in_plan(df, "BroadcastNestedLoopJoin")
+    assert_not_in_plan(df, "CartesianProduct")
+    assert_not_in_plan(df, "SortMergeJoin")
+
+
 def test_asof_join_single_exchange(spark):
     """The as-of join must stay the union+window formulation: exactly
     one hash exchange (the window partitioning on the key) and no

@@ -17,7 +17,12 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from inside_vectordb_spark.operators.metrics import mrr, precision_at_k, recall_at_k
+from inside_vectordb_spark.operators.metrics import (
+    evaluation_report,
+    mrr,
+    precision_at_k,
+    recall_at_k,
+)
 from inside_vectordb_spark.operators.skew import salted_equi_join
 
 # ranked results: per query a permutation-free list of doc ids
@@ -106,6 +111,15 @@ def test_metrics_match_reference_semantics(spark, results, qrels):
     assert math.isclose(got_r.get(k, 0.0), _ref_recall(results, qrels, k), abs_tol=1e-9)
     assert math.isclose(got_p[k], _ref_precision(results, qrels, k), abs_tol=1e-9)
     assert math.isclose(got_m, _ref_mrr(results, qrels), abs_tol=1e-9)
+    report = {
+        (r["metric"], r["k"]): r["value"]
+        for r in evaluation_report(topk, qr, (k,), (k,)).collect()
+    }
+    assert report == pytest.approx({
+        ("recall", k): round(_ref_recall(results, qrels, k), 6),
+        ("precision", k): round(_ref_precision(results, qrels, k), 6),
+        ("mrr", None): round(_ref_mrr(results, qrels), 6),
+    }, abs=1e-9)
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
@@ -574,6 +588,25 @@ def test_recall_zero_fills_when_no_query_judged(spark):
     )
     rows = recall_at_k(topk, qrels, (1, 5)).collect()
     assert [(r["k"], r["recall"]) for r in rows] == [(1, 0.0), (5, 0.0)]
+
+
+def test_metrics_empty_topk_output(spark):
+    """No searched query: recall keeps its 0.0 fallback per K,
+    precision has no rows, MRR is one NULL row — in the report and in
+    each metric alone."""
+    topk = spark.createDataFrame([], "query_id long, doc_id long, rank int")
+    qrels = spark.createDataFrame(
+        [(1, 10, 1)], "query_id long, doc_id long, relevance int"
+    )
+    rows = evaluation_report(topk, qrels, (1, 5), (1, 5)).collect()
+    assert sorted(
+        (r["metric"], r["k"] or 0, r["value"]) for r in rows
+    ) == [("mrr", 0, None), ("recall", 1, 0.0), ("recall", 5, 0.0)]
+    assert [tuple(r) for r in recall_at_k(topk, qrels, (1, 5)).collect()] == [
+        (1, 0.0), (5, 0.0)
+    ]
+    assert precision_at_k(topk, qrels, (1, 5)).collect() == []
+    assert [r["mrr"] for r in mrr(topk, qrels).collect()] == [None]
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
