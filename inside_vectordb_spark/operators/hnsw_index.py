@@ -35,9 +35,14 @@ Scale shape: vectors are routed to ``n_parts`` graph partitions by
 routes to the same partition its full-rebuild twin would. Search is
 scatter-gather with ZERO graph-row shuffles: each partition gets its
 own PartitionFilters-pruned scan coalesced into one task, whose
-mapInPandas reconstructs the kernel and answers the broadcast query
-batch with the ef beam; only Q×k partial rows reach the global merge
-exchange (plan-pinned in ``tests/test_plans.py``). Upserts rebuild
+mapInPandas reconstructs the kernel, answers the broadcast query
+batch with the ef beam and drops tombstoned ids (the bounded
+tombstone set rides the same broadcast). Each branch ends in a
+query_id exchange of its Q×k partial rows: without it Spark 4.1's
+partition-aware union folds the single-partition branches into one
+task, so the exchange is what makes the partitions search in
+parallel, and the global merge window reads its partitioning as is
+(plan-pinned in ``tests/test_plans.py``). Upserts rebuild
 ONLY the receiving partitions into a fresh generation dir (same
 no-shuffle shape) with O(delta) graph inserts — base nodes are never
 re-inserted; the stored RNG state continues the level-draw stream, so
@@ -97,6 +102,18 @@ GRAPH_SCHEMA = StructType(
         StructField("meta_json", StringType()),
     ]
 )
+
+
+def _scan_graph(spark: SparkSession, path: str, rel: str) -> DataFrame:
+    """One graph generation dir, read with GRAPH_SCHEMA pinned: every
+    generation is written with it, so inferring it again would only
+    cost a Spark job per relation per call."""
+    return spark.read.schema(GRAPH_SCHEMA).parquet(os.path.join(path, rel))
+
+
+def _scan_tombs(spark: SparkSession, tomb: str) -> DataFrame:
+    """The tombstone relation (one ``id`` column), schema pinned."""
+    return spark.read.schema("id long").parquet(tomb)
 
 
 def _tomb_dir(path: str, meta: dict) -> str:
@@ -406,11 +423,7 @@ def _read_graph(spark: SparkSession, path: str, meta: dict) -> DataFrame:
             by_rel.setdefault(rel, []).append(p)
     out = None
     for rel, parts in sorted(by_rel.items()):
-        g = (
-            spark.read.parquet(os.path.join(path, rel))
-            .withColumn("part", F.col("part").cast("long"))
-            .filter(F.col("part").isin(parts))
-        )
+        g = _scan_graph(spark, path, rel).filter(F.col("part").isin(parts))
         out = g if out is None else out.unionByName(g)
     if out is None:
         raise FileNotFoundError(f"no graph relations at {path}")
@@ -519,15 +532,24 @@ def ann_hnsw_topk_indexed(
         if query_filter_col is not None
         else None
     )
-    bc = spark.sparkContext.broadcast((qids_l, qmat_l, qvals_l))
-
     # hnswlib mark_deleted semantics: tombstoned nodes stay in the
     # graph (they still ROUTE the beam) but are filtered from results;
     # each partition over-fetches by the global tombstone count so a
-    # filtered-out neighbor can't starve the local top-k
+    # filtered-out neighbor can't starve the local top-k. The set is
+    # bounded (the mark_deleted contract), so it is read here — which
+    # also fixes the tombstone file list at frame construction — and
+    # rides the query broadcast into every partition's task
     n_deleted = int(meta.get("n_deleted", 0))
+    tomb = _tomb_dir(path, meta)
+    dead = np.array(
+        [r["id"] for r in mio.read_parquet_rows(tomb, columns=["id"])]
+        if mio.is_dir(tomb)
+        else [],
+        dtype=np.int64,
+    )
+    bc = spark.sparkContext.broadcast((qids_l, qmat_l, qvals_l, dead))
 
-    def _result_frame(qids, qmat, index, kk, allow):
+    def _result_frame(qids, qmat, index, kk, allow, dead):
         labels, dists = index.knn_query(qmat, k=kk, allow=allow)
         rows = np.repeat(np.arange(len(qids)), labels.shape[1])
         out = pd.DataFrame(
@@ -538,7 +560,8 @@ def ann_hnsw_topk_indexed(
             }
         )
         # non-finite distances are fewer-than-k-reachable pads
-        return out[np.isfinite(dists).ravel()]
+        keep = np.isfinite(dists).ravel() & ~np.isin(labels.ravel(), dead)
+        return out[keep]
 
     def search_one(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(columns=["query_id", "doc_id", "score"])
@@ -559,11 +582,11 @@ def ann_hnsw_topk_indexed(
             lvl0 = pdf[pdf["level"] == 0].sort_values("ord")
             node_vals = lvl0["__fval"].to_numpy(dtype=object)
         index = _index_from_rows(pdf, m, efc, dim)
-        qids, qmat, qvals = bc.value
+        qids, qmat, qvals, dead = bc.value
         kk = min(k + n_deleted, len(index))
         index.set_ef(max(ef_search, kk))
         if node_vals is None:
-            return _result_frame(qids, qmat, index, kk, allow)
+            return _result_frame(qids, qmat, index, kk, allow, dead)
         # grouped per-query-equality pass: the kernel above was
         # reconstructed ONCE; each distinct query value only cuts a
         # boolean mask from the attached node values (None/NaN node
@@ -576,7 +599,9 @@ def ann_hnsw_topk_indexed(
             mask = np.array([nv == v for nv in node_vals], dtype=bool)
             if not mask.any():
                 continue  # this partition holds no rows for the value
-            parts.append(_result_frame(qids[sel], qmat[sel], index, kk, mask))
+            parts.append(
+                _result_frame(qids[sel], qmat[sel], index, kk, mask, dead)
+            )
         return pd.concat(parts, ignore_index=True) if parts else empty
 
     # NO shuffle of graph rows: the graph is already partitioned by
@@ -585,8 +610,13 @@ def ann_hnsw_topk_indexed(
     # plan audit — at 100 TB that exchange IS the query cost). Each
     # partition instead gets its own pruned scan coalesced into one
     # task, whose mapInPandas concatenates its Arrow batches and
-    # searches; the per-part branches union. Only Q×k partial rows
-    # ever reach an exchange (the global merge window).
+    # searches. Each branch then hash-partitions its Q×k partials by
+    # query_id: Spark's partition-aware union (on by default since
+    # 4.1) would otherwise fold the n_parts single-partition branches
+    # into ONE task that searches them one after another. With the
+    # exchange every branch is its own concurrent task, only partial
+    # triples cross the wire, and the merge window reads the union's
+    # query_id partitioning without a further exchange.
     def search_whole_partition(batches):
         pdf = pd.concat(list(batches), ignore_index=True)
         if not pdf.empty:
@@ -597,10 +627,8 @@ def ann_hnsw_topk_indexed(
         rel = _live_rel(path, meta, p)
         if rel is None:
             continue
-        src = spark.read.parquet(os.path.join(path, rel)).filter(
-            # no cast on the partition column — it would block the
-            # PartitionFilters prune that makes this scan one dir
-            F.col("part") == p
+        src = _scan_graph(spark, path, rel).filter(
+            F.col("part") == p  # PartitionFilters prune: one dir
         )
         if allowed is not None:
             # left broadcast join: graph rows stay put (no exchange of
@@ -621,19 +649,14 @@ def ann_hnsw_topk_indexed(
                 F.col("node_id") == F.col("__fid"),
                 "left",
             ).drop("__fid")
-        branch = src.coalesce(1).mapInPandas(
-            search_whole_partition, _PARTIAL_SCHEMA
+        branch = (
+            src.coalesce(1)
+            .mapInPandas(search_whole_partition, _PARTIAL_SCHEMA)
+            .repartition("query_id")
         )
         partials = branch if partials is None else partials.unionByName(branch)
     if partials is None:
         raise FileNotFoundError(f"no graph relations at {path}")
-    tomb = _tomb_dir(path, meta)
-    if mio.is_dir(tomb):
-        partials = partials.join(
-            spark.read.parquet(tomb).withColumnRenamed("id", "doc_id"),
-            "doc_id",
-            "left_anti",
-        )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     out = partials.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
@@ -699,7 +722,7 @@ def _upsert_hnsw_locked(
         # surviving tombstone while the merged fingerprint counted it
         # (the sign-tier contract)
         stored_ids = stored_ids.unionByName(
-            spark.read.parquet(tomb).select(F.col("id").alias(id_col))
+            _scan_tombs(spark, tomb).select(F.col("id").alias(id_col))
         )
     delta = new_vectors.select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v")
@@ -776,17 +799,8 @@ def _upsert_hnsw_locked(
         if grel is not None:
             superseded.append([grel, p])
             g_rows = (
-                spark.read.parquet(os.path.join(path, grel))
+                _scan_graph(spark, path, grel)
                 .filter(F.col("part") == p)  # PartitionFilters prune
-                .select(
-                    F.col("part").cast("long").alias("part"),
-                    "ord",
-                    "node_id",
-                    "level",
-                    "neighbors",
-                    "vector",
-                    "meta_json",
-                )
                 .withColumn(
                     "__delta_v", F.lit(None).cast(ArrayType(DoubleType()))
                 )
@@ -902,7 +916,7 @@ def compact_hnsw_index(
         )
         g0 = _read_graph(spark, path, meta).filter(F.col("level") == 0)
         tomb_df = (
-            spark.read.parquet(tomb).withColumnRenamed("id", "doc_id")
+            _scan_tombs(spark, tomb).withColumnRenamed("id", "doc_id")
             if has_tomb
             else None
         )

@@ -54,12 +54,19 @@ def _queries(spark):
     return eio.query_vectors(spark, SF_DIR)
 
 
-def _twin_search(parts: dict[int, pd.DataFrame], qids, qmat, k, base_only_ids=None):
+def _twin_search(
+    parts: dict[int, pd.DataFrame], qids, qmat, k, base_only_ids=None,
+    groups=None, dead=(),
+):
     """In-memory twin of the indexed search: one kernel per routed
     partition (id-ASC insertion), beam search, global merge with the
     (score DESC, doc_id ASC) tie-break. ``base_only_ids`` splits each
     partition into a base batch and a delta batch (same-order upsert
-    twin)."""
+    twin). ``groups`` lists ``(query selector, allowed ids)`` pairs,
+    each searched under its allow mask; tombstoned ``dead`` ids are
+    over-fetched for and dropped only at the global merge."""
+    if groups is None:
+        groups = [(np.ones(len(qids), dtype=bool), None)]
     partials = []
     for part, pdf in sorted(parts.items()):
         pdf = pdf.sort_values("vec_id")
@@ -78,19 +85,27 @@ def _twin_search(parts: dict[int, pd.DataFrame], qids, qmat, k, base_only_ids=No
                         np.array(list(chunk["embedding"]), dtype=np.float64)
                     )
                     index.add_items(mat, ids)
-        kk = min(k, len(index))
+        kk = min(k + len(dead), len(index))
         index.set_ef(max(EF_SEARCH, kk))
-        labels, dists = index.knn_query(qmat, k=kk)
-        rows = np.repeat(np.arange(len(qids)), labels.shape[1])
-        out = pd.DataFrame(
-            {
-                "query_id": qids[rows],
-                "doc_id": labels.ravel(),
-                "score": 1.0 - dists.ravel(),
-            }
-        )
-        partials.append(out[np.isfinite(dists).ravel()])
+        for sel, allowed in groups:
+            mask = None
+            if allowed is not None:
+                # the mask is indexed by insertion order
+                mask = np.isin(index.get_state()["ids"], list(allowed))
+                if not mask.any():
+                    continue
+            labels, dists = index.knn_query(qmat[sel], k=kk, allow=mask)
+            rows = np.repeat(np.arange(int(sel.sum())), labels.shape[1])
+            out = pd.DataFrame(
+                {
+                    "query_id": qids[sel][rows],
+                    "doc_id": labels.ravel(),
+                    "score": 1.0 - dists.ravel(),
+                }
+            )
+            partials.append(out[np.isfinite(dists).ravel()])
     allp = pd.concat(partials, ignore_index=True)
+    allp = allp[~allp["doc_id"].isin(list(dead))]
     allp = allp.sort_values(
         ["query_id", "score", "doc_id"], ascending=[True, False, True]
     )
@@ -185,6 +200,43 @@ def test_indexed_search_matches_in_memory_twin(spark, tmp_path):
         got, want[got.columns.tolist()].astype(got.dtypes.to_dict()),
         check_exact=False, rtol=0, atol=1e-9,
     )
+
+
+def test_indexed_search_runs_one_task_per_partition(spark, tmp_path):
+    """The partitions are searched in parallel: each graph branch is
+    its own single-task stage. Without the per-branch partials
+    exchange, Spark's partition-aware union folds the branches into
+    ONE task that searches the partitions one after another."""
+    art = _art(tmp_path, "fanout")
+    build_hnsw_index(
+        _corpus(spark), art, dim=DIM, m=M, ef_construction=EFC,
+        n_parts=N_PARTS, seed=42,
+    )
+    assert len(mio.read_json(os.path.join(art, "meta.json"))["part_counts"]) == N_PARTS
+    df = ann_hnsw_topk_indexed(spark, _queries(spark), art, k=K)
+    sc = spark.sparkContext
+    group = "hnsw-fan-out"
+    sc.setJobGroup(group, "indexed search")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    stages = {
+        sid
+        for job in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(job).stageIds
+    }
+    scan_tasks = []
+    for sid in sorted(stages):
+        attempt = tracker.getStageInfo(sid).currentAttemptId
+        data = store.stageAttempt(sid, attempt, False, None, False, None)._1()
+        if data.inputRecords() > 0:  # a stage that read graph rows
+            scan_tasks.append(data.numCompleteTasks())
+    assert scan_tasks == [1] * N_PARTS, scan_tasks
 
 
 def test_search_without_rebuild_and_ensure_cache(spark, tmp_path):
@@ -862,3 +914,61 @@ def test_filtered_graph_search(spark, tmp_path):
         spark, q, art, k=K, ef_search=EF_SEARCH, filter_df=None
     ).toPandas()
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_filtered_search_drops_tombstones_in_every_mode(spark, tmp_path):
+    """Tombstones are dropped inside each partition's search task, the
+    one path the plain, ``filter_df`` and ``query_filter_col`` modes
+    share: no tombstoned id is returned, and the rows equal the twin
+    that drops them after the merge."""
+    from inside_vectordb_spark.operators.hnsw_index import delete_from_hnsw_index
+
+    art = _art(tmp_path, "filtered_tombs")
+    corpus = _corpus(spark)
+    build_hnsw_index(
+        corpus, art, dim=DIM, m=M, ef_construction=EFC, n_parts=N_PARTS, seed=42
+    )
+    grp = {
+        int(r["vec_id"]): int(r["grp"])
+        for r in corpus.select("vec_id", (F.col("label") % 3).alias("grp")).collect()
+    }
+    qpdf = _queries(spark).toPandas()
+    qids = qpdf["query_id"].to_numpy(np.int64)
+    qmat = _normalize_rows(np.array(list(qpdf["embedding"]), dtype=np.float64))
+    qvals = (qpdf["label"] % 3).to_numpy()
+    allowed = {i for i, g in grp.items() if g == 0}
+    # allowed queries' own vectors: each would otherwise rank first
+    dead = sorted(allowed & set(qids.tolist()))[:6]
+    assert len(dead) == 6
+    delete_from_hnsw_index(spark, art, dead)
+    parts = _routed_parts(spark, corpus)
+
+    def check(got, groups):
+        assert not set(got["doc_id"]) & set(dead)
+        want = _twin_search(parts, qids, qmat, K, groups=groups, dead=dead)
+        want = want.sort_values(["query_id", "rank"]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(
+            got, want[got.columns.tolist()].astype(got.dtypes.to_dict()),
+            check_exact=False, rtol=0, atol=1e-9,
+        )
+
+    allowed_df = corpus.filter(F.col("label") % 3 == 0).select("vec_id")
+    got = _sorted_frame(
+        ann_hnsw_topk_indexed(
+            spark, _queries(spark), art, k=K, ef_search=EF_SEARCH,
+            filter_df=allowed_df,
+        )
+    )
+    check(got, [(np.ones(len(qids), dtype=bool), allowed)])
+
+    got = _sorted_frame(
+        ann_hnsw_topk_indexed(
+            spark, _queries(spark).withColumn("grp", F.col("label") % 3), art,
+            k=K, ef_search=EF_SEARCH, query_filter_col="grp",
+            corpus_filter_df=corpus.withColumn("grp", F.col("label") % 3),
+        )
+    )
+    check(got, [
+        (qvals == v, {i for i, g in grp.items() if g == v})
+        for v in sorted(set(qvals.tolist()))
+    ])

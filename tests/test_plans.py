@@ -620,14 +620,50 @@ def test_mrl_coarse_window_group_limit_no_vectors_in_shuffle(spark):
                 assert not any(b in col for b in banned), (part, payload)
 
 
-def test_hnsw_indexed_only_partials_shuffle(spark):
-    """Scatter-gather over the stored graph: the only hash exchange
-    carries the Q×k partial triples, never graph rows or vectors."""
-    df = QUERIES["ann_hnsw_vendored_indexed"](spark, SF_DIR)
-    for part, cols in shuffled_payloads(df):
-        if part.startswith("hashpartitioning"):
+def test_hnsw_indexed_only_partials_shuffle(spark, tmp_path):
+    """Scatter-gather over the stored graph: every live partition's
+    branch ends in its own query_id exchange (so the partitions search
+    as parallel tasks), every hash exchange carries only the Q×k
+    partial triples, never graph rows or vectors, and tombstones are
+    dropped inside the search task instead of by a broadcast join."""
+    from inside_vectordb_spark import _meta_io as mio
+    from inside_vectordb_spark.operators.hnsw_index import (
+        _live_rel,
+        ann_hnsw_topk_indexed,
+        build_hnsw_index,
+        delete_from_hnsw_index,
+    )
+
+    art = str(tmp_path / "hnsw")
+    build_hnsw_index(
+        eio.load_table(spark, SF_DIR, "embeddings"), art, dim=64, n_parts=4
+    )
+    delete_from_hnsw_index(spark, art, [0, 3, 7])
+    tombstoned = ann_hnsw_topk_indexed(
+        spark, eio.query_vectors(spark, SF_DIR), art, k=10
+    )
+    registry = QUERIES["ann_hnsw_vendored_indexed"](spark, SF_DIR)
+    for df, idx in (
+        (tombstoned, art),
+        (registry, mio.art_path("hnsw_vendored", SF_DIR)),
+    ):
+        meta = mio.read_json(mio.join(idx, "meta.json"))
+        n_live = sum(
+            _live_rel(idx, meta, p) is not None
+            for p in range(int(meta["n_parts"]))
+        )
+        hashed = [
+            (part, cols)
+            for part, cols in shuffled_payloads(df)
+            if part.startswith("hashpartitioning")
+        ]
+        by_query = [p for p, _ in hashed if p.startswith("hashpartitioning(query_id")]
+        assert n_live and len(by_query) >= n_live, (n_live, hashed)
+        for part, cols in hashed:
             assert set(cols) <= {"query_id", "doc_id", "score"}, (part, cols)
-    assert_not_in_plan(df, "CartesianProduct")
+        assert_not_in_plan(df, "CartesianProduct")
+    assert_not_in_plan(tombstoned, "BroadcastExchange")
+    assert "tombstones" not in physical_plan(tombstoned)
 
 
 def test_mrl_sq_candidates_broadcast_no_vector_shuffle(spark):
